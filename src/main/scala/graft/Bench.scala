@@ -30,10 +30,15 @@ import org.apache.spark.sql.SparkSession
   *    `load_suspect` so it cannot ship as an official artifact.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+  /** The one engine session: the board's settings, used by every main
+    * (Verify, Demo, PlanAudit, the profiler, the scale canary) and by the
+    * test suite, so each of them measures and checks the engine the
+    * board times. `cpus` sets the local thread count and the shuffle
+    * partition count; it defaults to SPARK_GRAFT_CPUS, else the host's
+    * processors. Other Spark settings can be passed as `-Dspark.*=`
+    * JVM system properties. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
     val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
@@ -64,6 +69,13 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Logs.quietExpected()
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
+    val cpus = spark.sparkContext.getConf.get("spark.sql.shuffle.partitions")
     val debug = sys.env.contains("GRAFT_BENCH_DEBUG")
 
     def gcMillis: Long = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the physical plan of selected queries for scale auditing:
   * parquet pushdown (`PushedFilters`), column pruning (`ReadSchema`),
   * broadcast joins, top-k (`TakeOrderedAndProject`), whole-stage
@@ -10,10 +8,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     val wanted = if (args.isEmpty) Seq("q01", "q02", "q05", "q08", "q18")
                  else args.toSeq
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

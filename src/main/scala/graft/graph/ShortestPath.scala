@@ -30,13 +30,12 @@ object ShortestPath {
     * edges, and "" marks the source.
     *
     * edges: (src, dst, w: long ≥ 0) — negative weights rejected up
-    * front (one bounded scan) unless `validateWeights = false`. Runs
+    * front by the same one-row scan that counts the edges. Runs
     * `maxHops` relaxation rounds (Bellman-Ford converges in ≤ |V|-1;
     * callers bound it). With `earlyStop = false` the loop builds ONE
     * lazy plan — zero driver actions beyond the weight guard. */
   def state(edges: DataFrame, sourceId: Any, maxHops: Int,
             earlyStop: Boolean = true,
-            validateWeights: Boolean = true,
             noPrev: Any = ""): DataFrame = {
     // Persist the caller's edge subtree once (it is typically a scan +
     // aggregate and would otherwise re-execute for the guard and the
@@ -53,11 +52,9 @@ object ShortestPath {
     val firstRow = e0
       .agg(count(when(col("w") < 0, lit(1))).as("neg"),
         count(lit(1)).as("n")).first()
-    if (validateWeights) {
-      require(firstRow.getLong(0) == 0,
-        "negative edge weights are not supported (reference " +
-          "shortestpath/path.go:87-93 rejects them)")
-    }
+    require(firstRow.getLong(0) == 0,
+      "negative edge weights are not supported (reference " +
+        "shortestpath/path.go:87-93 rejects them)")
     val p = GraphUtil.partitionLaw(firstRow.getLong(1),
       edges.sparkSession)
     val e = e0.repartition(p, col("src"))

@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * Two ways to install:
   *
-  *   - programmatic: `SparkSession.builder().withExtensions(new
-  *     GraftExtensions)` — library embedding;
+  *   - programmatic: `.withExtensions(new GraftExtensions)` on the
+  *     session builder — library embedding, as [[graft.Bench.session]]
+  *     does;
   *   - configuration-only: `--conf spark.sql.extensions=
   *     graft.plans.GraftExtensions` — no code change on an existing
   *     application, the standard mechanism for cluster-wide rollout

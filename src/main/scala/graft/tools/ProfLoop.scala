@@ -1,39 +1,24 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Stage-level profiler: runs one SparkEntry query (args(0), default
-  * q11_pagerank) against SPARK_GRAFT_SF_DIR and dumps per-stage task
-  * counts, wall/cpu time and shuffle bytes — the feedback loop for
-  * judging whether an iterative plan is overhead-bound or work-bound. */
+/** The profiler: runs one SparkEntry query (args(0), default
+  * q11_pagerank) against SPARK_GRAFT_SF_DIR on the board's session
+  * ([[graft.Bench.session]]) and dumps per-stage task counts, wall/cpu
+  * time and shuffle bytes — the feedback loop for judging whether an
+  * iterative plan is overhead-bound or work-bound. Run:
+  * `tools/run.sh graft.tools.ProfLoop q68_kcore`. A Spark setting the
+  * session does not fix can be tried with
+  * `JAVA_TOOL_OPTIONS=-Dspark.<key>=<value>`. */
 object ProfLoop {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val qname = args.headOption.getOrElse("q11_pagerank")
-    val b0 = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_BENCH_MIN_PARTITION", "64k"))
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.FastLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-    // PROF_CONF="k1=v1;k2=v2" ad-hoc conf overrides for A/B probes
-    sys.env.get("PROF_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.nonEmpty)
-      .map(_.split("=", 2)).foreach {
-        case Array(k, v) => b0.config(k, v)
-        case bad => sys.error(
-          s"PROF_CONF entry '${bad.mkString("=")}' is not k=v")
-      }
-    val spark = b0.getOrCreate()
+    val spark = graft.Bench.session()
     println("file:// fs = " + new org.apache.hadoop.fs.Path("/tmp")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getClass.getName)
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
 
     // (id, name, tasks, wall, runSum, shufWr, cpuSum, gcSum, fetchWait,
     //  shufRdRecs)
@@ -43,13 +28,16 @@ object ProfLoop {
     // attempt's late completions can land AFTER a naive `stages = Nil`
     // reset and be mis-attributed to the profiled run. Gate on the
     // stage's own submissionTime instead — only stages submitted at or
-    // after the profiled attempt's start are recorded.
+    // after the profiled attempt's start are recorded. A stage without
+    // a submissionTime completing once the profiled attempt has begun
+    // belongs to it, so it is counted too.
     @volatile var profileFromMs = Long.MaxValue
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(
           sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
-        if (si.submissionTime.forall(_ < profileFromMs)) return
+        if (profileFromMs == Long.MaxValue ||
+            si.submissionTime.exists(_ < profileFromMs)) return
         val dur = (for {s <- si.submissionTime; c <- si.completionTime}
           yield c - s).getOrElse(-1L)
         val m = si.taskMetrics

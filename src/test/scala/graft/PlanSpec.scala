@@ -199,6 +199,42 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"), "LPA vote argmax must stay a hash-agg")
   }
 
+  test("label propagation and Louvain argmaxes plan as HashAggregate, " +
+    "not SortAggregate") {
+    import spark.implicits._
+    def argmaxAgg(plan: String): Option[String] =
+      plan.linesIterator.find(l => l.contains("Aggregate") && l.contains("max("))
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (-5L, 4L))
+      .toDF("src", "dst")
+    val labels = Seq(1L, 2L, 3L, 4L, -5L).toDF("id")
+      .select(col("id"), col("id").as("lab"))
+    val louvain = graph.Louvain.moveRound(edges, labels, allowUp = true)
+      .queryExecution.executedPlan.toString
+    // LPA's rounds are localCheckpoint generations, so its result plan is
+    // a scan of the last one: read the rounds' plans off the listener.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val lpa = try {
+      graph.Communities.labelPropagation(edges, 2).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      def found = plans.toArray(Array.empty[String]).find(argmaxAgg(_).isDefined)
+      while (found.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      found.getOrElse(fail("no LPA round plan reached the listener"))
+    } finally spark.listenerManager.unregister(listener)
+    Seq(lpa, louvain).foreach { p =>
+      assert(!p.contains("SortAggregate"), p)
+      assert(argmaxAgg(p).exists(_.contains("HashAggregate")), p)
+    }
+  }
+
   test("weighted sample plans TakeOrderedAndProject, not a global sort") {
     val p = planOf("q88_weighted_sample")
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(8)

@@ -210,4 +210,33 @@ class PropertySpec extends SparkSpec {
       assert(r.getAs[Int]("keep") === flags.product)
     }
   }
+
+  test("packed argmax elects max(struct(score, -label)) for arbitrary " +
+    "Long labels") {
+    // Ties on small scores exercise the label tie-break; wide signed
+    // scores cover Louvain's gains; chooseNum also draws the Long
+    // extremes, so Long.MinValue and Long.MaxValue labels occur.
+    val g = Gen.zip(Gen.chooseNum(0L, 7L),
+      Gen.oneOf(Gen.chooseNum(0L, 3L),
+        Gen.chooseNum(-(1L << 62) + 1, (1L << 62) - 1)),
+      Gen.oneOf(Gen.chooseNum(Long.MinValue, Long.MaxValue),
+        Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, Long.MaxValue)))
+    val rows = cases(g, 400, 43L)
+    val df = rows.toDF("id", "s", "l")
+    val packed = df.groupBy("id")
+      .agg(max(graph.GraphUtil.packArgmax(col("s"), col("l"))).as("w"))
+      .select(col("id"), graph.GraphUtil.unpackArgmax(col("w")).as("l"))
+      .as[(Long, Long)].collect().toMap
+    // -label in DECIMAL: negating Long.MinValue in LONG overflows
+    val viaStruct = df.groupBy("id")
+      .agg(max(struct(col("s"),
+        negate(col("l").cast("decimal(20,0)")).as("nl"))).as("m"))
+      .select(col("id"), negate(col("m.nl")).cast("long").as("l"))
+      .as[(Long, Long)].collect().toMap
+    val want = rows.groupBy(_._1).map { case (id, rs) =>
+      id -> rs.maxBy { case (_, s, l) => (s, -BigInt(l)) }._3 }
+    assert(packed === want)
+    assert(viaStruct === want)
+    assert(rows.exists(_._3 < 0), "generator drew no negative label")
+  }
 }

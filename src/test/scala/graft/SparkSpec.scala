@@ -4,24 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM per `sbt test` fork). */
+/** Shared local session for all specs (one JVM per `sbt test` fork):
+  * the board's engine ([[Bench.session]]) on 4 threads. The session time
+  * zone comes from build.sbt's `-Dspark.sql.session.timeZone=UTC`. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = {} // session shared across suites
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
-    s
-  }
+  lazy val session: SparkSession = Bench.session("4")
 }

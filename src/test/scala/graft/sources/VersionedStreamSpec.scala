@@ -195,8 +195,8 @@ class VersionedStreamSpec extends SparkSpec {
     // the boundary itself: a commit published EXACTLY at the instant
     // is INCLUDED (versionAtOrAfter, Delta semantics — the old
     // versionAt+1 resolution skipped it)
-    val mt2 = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
+    val mt2 = org.apache.hadoop.fs.FileSystem.get(
+        java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
       .getFileStatus(new org.apache.hadoop.fs.Path(
         root, "manifest-v2.json")).getModificationTime
     assert(Versioned.versionAtOrAfter(root, mt2).contains(2L))
